@@ -100,7 +100,7 @@ object EthTx {
     // with sidecar keep the wrapper bytes (go-ethereum re-encodes blobs too)
     val minimal = Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload))
     val canonical = if (hasSidecar) raw else minimal
-    val hash = Keccak256.hash(Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload)))
+    val hash = Keccak256.hash(minimal)
 
     val sigHash = Keccak256.hash(
       Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload.take(nUnsigned))))

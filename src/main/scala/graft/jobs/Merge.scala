@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.functions.ParseTx
 import graft.ops.Sources
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship batch job (SURVEY.md §3.1; cmd/merge/transactions.go:22-185)
@@ -23,7 +23,11 @@ import org.apache.spark.sql.functions._
   *    size estimate fits the session threshold (blocks is ~25 % of input
   *    rows, not a bounded dim — see [[Merge.broadcastIfSmall]]), else the
   *    join degrades to a shuffle on the already-partitioned `hash` key;
-  *  - the final sort is a range-partitioned total order (SortExec spills).
+  *  - the final sort is a range-partitioned total order (SortExec spills);
+  *  - both aggregations are hash-based `collect_list`s over a hash's few
+  *    sightings: a struct `min` forces a sort-based aggregate, whose sorts
+  *    and interpreted projections add generated classes to every day
+  *    (Spark's codegen cache holds 100; a day must fit to reuse them).
   */
 object Merge {
 
@@ -45,7 +49,7 @@ object Merge {
       parsed: DataFrame)
 
   /** P11 hash validity (common/sourcelog.go:41-48). */
-  def validHash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def validHash(c: Column): Column =
     length(c) === 66 && c.rlike("^0x[0-9a-f]{64}$")
 
   /** [[graft.ops.Hints.broadcastIfSmall]] for the blacklist and blocks
@@ -61,16 +65,19 @@ object Merge {
     val raw = in.rawTxs
       .withColumn("hash", lower(col("hash")))
       .filter(validHash(col("hash")) && col("timestamp_ms").isNotNull)
+    // earliest sighting wins, ties to the lower raw hex: min(struct) order
     val deduped = raw
       .groupBy("hash")
-      .agg(min(struct(col("timestamp_ms"), col("raw_tx_hex"))).as("f"))
+      .agg(array_min(collect_list(struct(col("timestamp_ms"), col("raw_tx_hex")))).as("f"))
       .select(col("hash"), col("f.timestamp_ms").as("timestamp_ms"),
         col("f.raw_tx_hex").as("raw_tx_hex"))
 
     // ── blacklist anti-join before the parse (J2) ─────────────────────
     val fresh = in.blacklist match {
       case Some(bl) =>
-        val blNorm = bl.select(lower(col("hash")).as("hash")).distinct()
+        // no distinct: an anti join drops a row on any match, so a repeated
+        // hash costs a build row, not an aggregation and its exchange
+        val blNorm = bl.select(lower(col("hash")).as("hash"))
         deduped.join(broadcastIfSmall(blNorm), Seq("hash"), "left_anti")
       case None => deduped
     }
@@ -96,11 +103,9 @@ object Merge {
     val sourcesByHash = in.sourcelog
       .withColumn("hash", lower(col("hash")))
       .filter(validHash(col("hash")))
-      .groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts")) // A2
       .groupBy("hash")
-      .agg(transform(
-        array_sort(collect_list(struct(col("first_ts"), col("source")))),
-        x => x.getField("source")).as("sources"))
+      .agg(orderedSources(collect_list(
+        struct(col("timestamp_ms").as("ts"), col("source")))).as("sources"))
 
     val withSources = valid
       .join(sourcesByHash, Seq("hash"), "left")
@@ -140,6 +145,20 @@ object Merge {
     Output(out, trash, parsed)
   }
 
+  /** A2 + O3 over one hash's sightings (array of struct(ts, source)): each
+    * source once, at its earliest non-null timestamp, ordered by
+    * (timestamp, source) — the order of a per-(hash, source) `min(ts)`
+    * followed by a sort of struct(first_ts, source), computed from one
+    * `collect_list` so the attach needs a single aggregation. A source seen
+    * only with null timestamps has a null first timestamp, so it sorts
+    * first (struct fields order nulls first), by source. */
+  private[graft] def orderedSources(sightings: Column): Column = {
+    def firstSeen(keep: Column => Column) =
+      array_distinct(transform(array_sort(filter(sightings, keep)), _.getField("source")))
+    val dated = firstSeen(_.getField("ts").isNotNull)
+    concat(array_except(firstSeen(_.getField("ts").isNull), dated), dated)
+  }
+
   /** A2 standalone: sourcelog merge (cmd/merge/sourcelog.go:64-108 +
     * common/sourcelog.go:12-65): normalize source tags, keep the earliest
     * timestamp per (hash, source). One hash-partitioned aggregate with
@@ -153,13 +172,18 @@ object Merge {
 
   /** A3 standalone: trash merge (cmd/merge/trash.go:64-108 +
     * common/trashfile.go:66-103): earliest entry per (hash, source) wins,
-    * carrying its reason/notes (min-struct, same shape as the A1 dedup). */
+    * carrying its reason/notes — the least struct(ts, reason, notes), as
+    * `min` would pick it. The struct is taken with `array_min` over a
+    * `collect_list`: a hash-based aggregate, where `min` over a struct
+    * buffer forces a sort-based one (two sorts and their generated
+    * projections). A key's entries are few — one per collector sighting. */
   def mergeTrash(trash: DataFrame): DataFrame =
     trash
       .withColumn("source", Sources.normalizeSource(col("source")))
       .withColumn("notes", coalesce(col("notes"), lit("")))
       .groupBy("hash", "source")
-      .agg(min(struct(col("timestamp_ms"), col("reason"), col("notes"))).as("f"))
+      .agg(array_min(collect_list(
+        struct(col("timestamp_ms"), col("reason"), col("notes")))).as("f"))
       .select(col("f.timestamp_ms").as("timestamp_ms"), col("hash"),
         col("source"), col("f.reason").as("reason"), col("f.notes").as("notes"))
 }

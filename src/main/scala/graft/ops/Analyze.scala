@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The analyzer aggregate pack (SURVEY.md §3.2; common/analyzer.go:53-213):
-  * A6-A12 computed as a handful of Spark aggregation jobs over one cached
-  * DataFrame, plus a driver-side text renderer in the reference's summary
-  * layout. Only final aggregate rows are collected — never the data.
+  * A6-A12 computed in ONE aggregation over the caller's DataFrame, plus a
+  * driver-side text renderer in the reference's summary layout. Only
+  * final aggregate rows are collected — never the data.
   */
 object Analyze {
 
@@ -19,53 +20,62 @@ object Analyze {
       perType: Seq[TypeStat], perSource: Seq[SourceStat])
 
   /** txs: the merged transactions DataFrame (reference parquet schema).
-    * Applies the F1 filter itself, like NewAnalyzer2 (common/analyzer.go:68-73). */
+    * Applies the F1 filter itself, like NewAnalyzer2 (common/analyzer.go:68-73).
+    *
+    * One scan, one exchange: `posexplode_outer` turns each tx into one row
+    * per source (one row with a null `pos` when it has none), and a single
+    * `groupBy(txType, source)` computes every counter. A tx's row with
+    * `pos` null or 0 is its first, so per-tx totals count only those; the
+    * per-source counters count the rows with a source. The result has at
+    * most types × sources rows, folded on the driver. The input is read
+    * once, so it is not cached here — callers that reuse it persist it. */
   def summarize(txsIn: DataFrame): Summary = {
     // metadata-only archives (no rawTx) still analyze; byte stats become 0
     val rawBytes =
       if (txsIn.columns.contains("rawTx")) length(col("rawTx")).cast("long")
       else lit(0L)
-    val txs = txsIn
+    val inc = col("includedAtBlockHeight") =!= 0
+    val first = coalesce(col("pos"), lit(0)) === 0
+    val sourced = col("pos").isNotNull
+    val exclusive = sourced && col("nSrc") === 1
+    def n(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+    val groups = txsIn
       .filter(!(col("includedAtBlockHeight") > 0 && col("inclusionDelayMs") <= -12000))
-      .select(col("hash"), col("txType"), rawBytes.as("rawBytes"),
-        col("sources"), col("includedAtBlockHeight"), col("timestamp"))
-      .withColumn("included", col("includedAtBlockHeight") =!= 0)
-      .cache()
+      .select(col("txType"), rawBytes.as("rawBytes"), inc.as("inc"),
+        col("timestamp").cast("long").as("ts"), size(col("sources")).as("nSrc"),
+        posexplode_outer(col("sources")).as(Seq("pos", "source")))
+      .groupBy("txType", "source")
+      .agg(
+        n(first), sum(when(first, col("rawBytes")).otherwise(0L)), n(first && col("inc")),
+        min(col("ts")), max(col("ts")),
+        n(sourced), n(sourced && col("inc")), n(sourced && !col("inc")),
+        n(exclusive), n(exclusive && col("inc")))
+      .collect().toSeq
+    def long(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
-    // A6, A7, A12 in one pass
-    val g = txs.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("included"), 1L).otherwise(0L)).as("inc"),
-      min(col("timestamp").cast("long")).as("first"),
-      max(col("timestamp").cast("long")).as("last")).head()
-    val n = g.getLong(0)
-    val inc = if (g.isNullAt(1)) 0L else g.getLong(1)
+    // A6, A7, A12
+    val nTx = groups.map(long(_, 2)).sum
+    val nInc = groups.map(long(_, 4)).sum
+    def present(i: Int): Seq[Long] = groups.filterNot(_.isNullAt(i)).map(_.getLong(i))
 
     // A8: per type count + byte volume (rawTx is binary → length = bytes)
-    val perType = txs.groupBy("txType")
-      .agg(count(lit(1)).as("n"), sum(col("rawBytes")).as("bytes"))
-      .orderBy("txType").collect().toSeq
-      .map(r => TypeStat(r.getLong(0), r.getLong(1), r.getLong(2)))
+    val perType = groups.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (t, rs) =>
+      TypeStat(t, rs.map(long(_, 2)).sum, rs.map(long(_, 3)).sum)
+    }
 
-    // A9-A11: per source: totals, landed split, exclusive orderflow
-    val perSource = txs
-      .select(col("included"), size(col("sources")).as("nSrc"),
-        explode(col("sources")).as("source"))
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("included"), 1L).otherwise(0L)).as("onChain"),
-        sum(when(!col("included"), 1L).otherwise(0L)).as("notOnChain"),
-        sum(when(col("nSrc") === 1, 1L).otherwise(0L)).as("exclusive"),
-        sum(when(col("nSrc") === 1 && col("included"), 1L).otherwise(0L)).as("exclusiveIncluded"))
-      .orderBy("source").collect().toSeq
-      .map(r => SourceStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
+    // A9-A11: per source: totals, landed split, exclusive orderflow. Sources
+    // sort as Spark sorts strings — UTF-8 bytes, unsigned, null first.
+    val utf8 = Ordering.fromLessThan[String] { (a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
+    }
+    val perSource = groups.filter(long(_, 7) > 0).groupBy(r => Option(r.getString(1)))
+      .toSeq.sortBy(_._1)(Ordering.Option(utf8)).map { case (src, rs) =>
+        def total(i: Int) = rs.map(long(_, i)).sum
+        SourceStat(src.orNull, total(7), total(8), total(9), total(10), total(11))
+      }
 
-    txs.unpersist()
-    Summary(n, inc, n - inc,
-      if (g.isNullAt(2)) 0L else g.getLong(2),
-      if (g.isNullAt(3)) 0L else g.getLong(3),
+    Summary(nTx, nInc, nTx - nInc,
+      present(5).minOption.getOrElse(0L), present(6).maxOption.getOrElse(0L),
       perType, perSource)
   }
 

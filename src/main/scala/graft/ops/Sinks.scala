@@ -360,10 +360,13 @@ object Sinks {
       .orderBy("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
 
-  /** S12: trash CSV (cmd/merge/trash.go:64-108). */
+  /** S12: trash CSV (cmd/merge/trash.go:64-108), one ts-sorted file like
+    * the reference's per-day trash file. A day's trash is a few percent of
+    * its txs, so one sort task holds it; a single-partition exchange needs
+    * no sampling job, where a range sort runs its input twice. */
   def writeTrashCsv(trash: DataFrame, path: String): Unit =
     trash.select("timestamp_ms", "hash", "source", "reason", "notes")
-      .orderBy("timestamp_ms")
+      .repartition(1).sortWithinPartitions("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
 
   /** S14: batched-JDBC streaming sink contract (collector/clickhouse.go:

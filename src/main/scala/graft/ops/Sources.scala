@@ -67,12 +67,12 @@ object Sources {
 
   /** J2 input: hashes from previous-day metadata CSVs (column 1;
     * common/txsfile.go:212-239). Headers are skipped by the hash-validity
-    * filter itself — positional, schema-free, like the reference. */
+    * filter itself — positional, schema-free, like the reference. A hash
+    * may repeat across files; the blacklist anti join needs no dedup. */
   def readMetadataHashes(spark: SparkSession, paths: String*): DataFrame =
     spark.read.csv(paths: _*)
       .select(lower(col("_c1")).as("hash"))
       .filter(validHash(col("hash")))
-      .distinct()
 
   /** S2: CSV-in-ZIP ingestion (common/txsfile.go:46-68 behavior): iterate
     * the `.csv` members of each `.csv.zip` archive. Spark has no zip codec,

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.jobs.{InclusionCheck, Merge}
 import graft.queries.MempoolParse
@@ -63,62 +62,11 @@ class InclusionCheckSpec extends AnyFunSuite {
           .otherwise(lit(0L)))
       .drop("block_number", "block_ts_ms")
 
-  /** In-process JSON-RPC node: eth_getTransactionReceipt +
-    * eth_getBlockByHash over the fixture, with request counters. */
   private def withRpcServer[T](
       txBlock: Map[String, String] = txToBlock,
       blocks: Map[String, (Long, Long, Seq[String])] = blocksByHash)(
-      body: (String, AtomicLong, AtomicLong) => T): T = {
-    val receiptReqs = new AtomicLong
-    val blockReqs = new AtomicLong
-    val mapper = new ObjectMapper()
-    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val req = mapper.readTree(ex.getRequestBody)
-        def one(node: com.fasterxml.jackson.databind.JsonNode): String = {
-          val id = if (node.has("id")) node.get("id").asInt(1) else 1
-          val result = node.get("method").asText() match {
-            case "eth_getTransactionReceipt" =>
-              receiptReqs.incrementAndGet()
-              val h = node.get("params").get(0).asText()
-              txBlock.get(h) match {
-                case Some(bh) =>
-                  val (num, _, _) = blocks(bh)
-                  s"""{"blockHash":"$bh","blockNumber":"0x${num.toHexString}"}"""
-                case None => "null"
-              }
-            case "eth_getBlockByHash" =>
-              blockReqs.incrementAndGet()
-              val bh = node.get("params").get(0).asText()
-              blocks.get(bh) match {
-                case Some((num, tsSec, txs)) =>
-                  s"""{"number":"0x${num.toHexString}","timestamp":"0x${tsSec.toHexString}","transactions":[${txs.map(t => s""""$t"""").mkString(",")}]}"""
-                case None => "null"
-              }
-            case m => throw new IllegalArgumentException(s"unexpected method $m")
-          }
-          s"""{"jsonrpc":"2.0","id":$id,"result":$result}"""
-        }
-        // JSON-RPC 2.0 batch: array in, array out (per-element counters)
-        val resp =
-          if (req.isArray) {
-            val it = req.elements()
-            val parts = Seq.newBuilder[String]
-            while (it.hasNext) parts += one(it.next())
-            parts.result().mkString("[", ",", "]")
-          } else one(req)
-        val bytes = resp.getBytes("UTF-8")
-        ex.sendResponseHeaders(200, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.start()
-    try body(s"http://127.0.0.1:${server.getAddress.getPort}/",
-      receiptReqs, blockReqs)
-    finally server.stop(0)
-  }
+      body: (String, AtomicLong, AtomicLong) => T): T =
+    LoopbackRpc.serve(txBlock, blocks)(body)
 
   private def collectSorted(df: DataFrame): Seq[Row] =
     df.select("hash", "timestamp", "includedAtBlockHeight",
@@ -178,7 +126,10 @@ class InclusionCheckSpec extends AnyFunSuite {
     "sequential path; blocks still fetched once each") {
     withRpcServer() { (uri, receiptReqs, blockReqs) =>
       val stats = InclusionCheck.Stats(spark)
-      val out = InclusionCheck.enrich(inputDf.repartition(1),
+      // one hash-ordered partition: the enrich input and the simulated
+      // walk below read the same row order by construction
+      val ordered = inputDf.orderBy("hash").coalesce(1)
+      val out = InclusionCheck.enrich(ordered,
         InclusionCheck.JsonRpcFactory(uri), Some(stats),
         rpcBatchSize = 64).persist()
       out.count()
@@ -197,8 +148,7 @@ class InclusionCheckSpec extends AnyFunSuite {
       // as misses; pending hashes re-probe every chunk) — deterministic
       // for this fixture, so simulate the documented chunk walk over the
       // same single-partition row order and require equality.
-      val order = inputDf.repartition(1).select("hash")
-        .collect().map(_.getString(0))
+      val order = ordered.select("hash").collect().map(_.getString(0))
       var eHits = 0L; var eMisses = 0L; var eReceipts = 0L; var eBlocks = 0L
       val cached = scala.collection.mutable.Set.empty[String]
       order.grouped(64).foreach { chunk =>

@@ -57,6 +57,30 @@ class MergeJobSpec extends AnyFunSuite {
     assert(txs.filter(size(col("sources")) === 0).count() == 0)
   }
 
+  test("one-groupBy sources attach keeps the min-then-sort order, null timestamps included") {
+    import spark.implicits._
+    val h1 = "0x" + "1" * 64
+    val h2 = "0x" + "2" * 64
+    val n = null.asInstanceOf[java.lang.Long]
+    val sl = Seq[(java.lang.Long, String, String)](
+      (n, h1, "x"), (5L, h1, "y"), (n, h1, "y"), (3L, h1, "z"), (3L, h1, "w"),
+      (n, h1, "x"), (7L, h1, null), (9L, h1, "w"), (4L, h1, "y"),
+      (n, h2, null), (n, h2, "b"), (2L, h2, "a"), (2L, h2, "a"))
+      .toDF("timestamp_ms", "hash", "source")
+    def bySource(df: org.apache.spark.sql.DataFrame): Map[String, Seq[String]] =
+      df.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    // today's order: earliest non-null ts per (hash, source), then the
+    // sorted struct(first_ts, source) — a null first_ts sorts first
+    val twoLevel = bySource(sl.groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts"))
+      .groupBy("hash").agg(transform(array_sort(collect_list(struct(col("first_ts"), col("source")))),
+        x => x.getField("source")).as("sources")))
+    val onePass = bySource(sl.groupBy("hash").agg(Merge.orderedSources(
+      collect_list(struct(col("timestamp_ms").as("ts"), col("source")))).as("sources")))
+    assert(onePass == twoLevel)
+    assert(onePass(h1) == Seq("x", "w", "z", "y", null))
+    assert(onePass(h2) == Seq(null, "b", "a"))
+  }
+
   test("analyzer summary renders with consistent counts") {
     val s = Analyze.summarize(txs)
     assert(s.nUnique == txs.count())
