@@ -3,9 +3,11 @@ package graft.functions
 import java.math.BigInteger
 
 /** secp256k1 ECDSA public-key recovery (SEC 1 v2 §4.1.6) in pure JVM —
-  * BigInteger Jacobian point arithmetic, no native libraries. Used by
-  * parse_raw_tx for sender recovery (the `types.Sender` behavior at
-  * /root/reference/common/txsfile.go:166). Public curve parameters.
+  * Jacobian point arithmetic on [[Fp256]] limbs, one GLV wNAF ladder, no
+  * native libraries. Used by parse_raw_tx for sender recovery (the
+  * `types.Sender` behavior at the reference's common/txsfile.go:166).
+  * Public curve parameters; the GLV constants are pinned and proven
+  * against the curve by Secp256k1Spec.
   */
 object Secp256k1 {
   private val P = new BigInteger(
@@ -21,87 +23,43 @@ object Secp256k1 {
   // (p+1)/4 — sqrt exponent, p ≡ 3 (mod 4)
   private val SqrtExp = P.add(BigInteger.ONE).shiftRight(2)
 
-  /** Jacobian point (x = X/Z², y = Y/Z³); Z = 0 ⇒ infinity. Projective
-    * coordinates avoid the per-operation modular inversion of affine math
-    * (one inversion total, at the end) — the standard EC speedup. */
-  private final case class Pt(x: BigInteger, y: BigInteger, z: BigInteger) {
-    def isInfinity: Boolean = z.signum == 0
-  }
-  private val Infinity = Pt(BigInteger.ONE, BigInteger.ONE, BigInteger.ZERO)
-  private val G = Pt(Gx, Gy, BigInteger.ONE)
+  // ── GLV endomorphism (secp256k1 has φ(x,y) = (βx, y) = λ·(x,y)) ──────
+  // λ is a cube root of unity mod n, β the matching one mod p, and
+  // v1, v2 a lattice basis of {(a, b) : a + b·λ ≡ 0 (mod n)} from extended
+  // Euclid on (n, λ), stopped at the first remainder below √n (the
+  // standard GLV construction). Secp256k1Spec proves each identity.
 
-  private def mod(v: BigInteger): BigInteger = {
-    val m = v.mod(P); m
-  }
+  private[graft] val Lambda = new BigInteger(
+    "ac9c52b33fa3cf1f5ad9e3fd77ed9ba4a880b9fc8ec739c2e0cfc810b51283ce", 16)
+  private[graft] val Beta = new BigInteger(
+    "851695d49a83f8ef919bb86153cbcb16630fb68aed0a766a3ec693d68e6afa40", 16)
+  private[graft] val V1 = (new BigInteger("e4437ed6010e88286f547fa90abfe4c3", 16),
+    new BigInteger("-3086d221a7d46bcde86c90e49284eb15", 16))
+  private[graft] val V2 = (new BigInteger("4a5d84c4fad1d149815130f31c84462e4", 16),
+    new BigInteger("2228364f61bcd8f0cda23c16c0ac386f", 16))
+  private val BetaL = Fp256.fromBigInteger(Beta)
 
-  /** 2·A, Jacobian doubling for a = 0 (secp256k1). */
-  private def dbl(p: Pt): Pt = {
-    if (p.isInfinity || p.y.signum == 0) return Infinity
-    val a = mod(p.x.multiply(p.x)) // X²
-    val b = mod(p.y.multiply(p.y)) // Y²
-    val c = mod(b.multiply(b)) // Y⁴
-    val xb = p.x.add(b)
-    val d = mod(xb.multiply(xb).subtract(a).subtract(c).shiftLeft(1)) // 2((X+Y²)²−X²−Y⁴)
-    val e = mod(a.multiply(BigInteger.valueOf(3))) // 3X²
-    val x3 = mod(e.multiply(e).subtract(d.shiftLeft(1)))
-    val y3 = mod(e.multiply(d.subtract(x3)).subtract(c.shiftLeft(3)))
-    val z3 = mod(p.y.multiply(p.z).shiftLeft(1))
-    Pt(x3, y3, z3)
-  }
-
-  /** A + B, general Jacobian addition. */
-  private def add(p: Pt, q: Pt): Pt = {
-    if (p.isInfinity) return q
-    if (q.isInfinity) return p
-    val z1z1 = mod(p.z.multiply(p.z))
-    val z2z2 = mod(q.z.multiply(q.z))
-    val u1 = mod(p.x.multiply(z2z2))
-    val u2 = mod(q.x.multiply(z1z1))
-    val s1 = mod(p.y.multiply(z2z2).multiply(q.z))
-    val s2 = mod(q.y.multiply(z1z1).multiply(p.z))
-    val h = mod(u2.subtract(u1))
-    val r = mod(s2.subtract(s1))
-    if (h.signum == 0) {
-      if (r.signum == 0) return dbl(p)
-      return Infinity
+  /** Balanced decomposition k = k1 + k2·λ (mod n), |k1|,|k2| ≈ √n. */
+  private[graft] def glvDecompose(k: BigInteger): (BigInteger, BigInteger) = {
+    // Babai rounding of (k,0) onto the lattice: round(num / n) to nearest
+    def rnd(num: BigInteger): BigInteger = {
+      val qr = num.add(N.shiftRight(1)).divideAndRemainder(N)
+      if (qr(1).signum < 0) qr(0).subtract(BigInteger.ONE) else qr(0)
     }
-    val h2 = mod(h.multiply(h))
-    val h3 = mod(h2.multiply(h))
-    val u1h2 = mod(u1.multiply(h2))
-    val x3 = mod(r.multiply(r).subtract(h3).subtract(u1h2.shiftLeft(1)))
-    val y3 = mod(r.multiply(u1h2.subtract(x3)).subtract(s1.multiply(h3)))
-    val z3 = mod(h.multiply(p.z).multiply(q.z))
-    Pt(x3, y3, z3)
+    val c1 = rnd(V2._2.multiply(k))
+    val c2 = rnd(V1._2.negate.multiply(k))
+    val k1 = k.subtract(c1.multiply(V1._1)).subtract(c2.multiply(V2._1))
+    val k2 = c1.multiply(V1._2).add(c2.multiply(V2._2)).negate
+    (k1, k2)
   }
-
-  /** Mixed addition: Jacobian P + affine (x2, y2) — fewer field mults than
-    * the general add (the affine point has Z = 1). */
-  private def addAffine(p: Pt, x2: BigInteger, y2: BigInteger): Pt = {
-    if (p.isInfinity) return Pt(x2, y2, BigInteger.ONE)
-    val z1z1 = mod(p.z.multiply(p.z))
-    val u2 = mod(x2.multiply(z1z1))
-    val s2 = mod(y2.multiply(z1z1).multiply(p.z))
-    val h = mod(u2.subtract(p.x))
-    val r = mod(s2.subtract(p.y))
-    if (h.signum == 0) {
-      if (r.signum == 0) return dbl(p)
-      return Infinity
-    }
-    val h2 = mod(h.multiply(h))
-    val h3 = mod(h2.multiply(h))
-    val u1h2 = mod(p.x.multiply(h2))
-    val x3 = mod(r.multiply(r).subtract(h3).subtract(u1h2.shiftLeft(1)))
-    val y3 = mod(r.multiply(u1h2.subtract(x3)).subtract(p.y.multiply(h3)))
-    Pt(x3, y3, mod(h.multiply(p.z)))
-  }
-
-  private def negate(p: Pt): Pt =
-    if (p.isInfinity) p else Pt(p.x, P.subtract(p.y), p.z)
 
   /** Width-w NAF digits (LSB first): zero or odd with |d| < 2^(w-1);
     * nonzero density ~1/(w+1). Runs on 64-bit limbs — the digit loop
     * iterates once per scalar bit, so BigInteger churn here showed up in
-    * recovery profiles. */
+    * recovery profiles. R scalars use w = 5 (odd |d| ≤ 15, the 8-entry
+    * table computed per recovery); G scalars use w = 8 (odd |d| ≤ 127,
+    * the static 64-entry tables; ~14 adds per 128-bit GLV scalar instead
+    * of ~26 at w = 4). */
   private def wnaf(kIn: BigInteger, w: Int): Array[Int] = {
     val l = new Array[Long](5) // ≤ 320 bits, enough for any scalar here
     var tmp = kIn
@@ -143,54 +101,20 @@ object Secp256k1 {
     }
     java.util.Arrays.copyOf(out, i)
   }
-  /** R-point window: width 5 → odd |d| ≤ 15 → the 8-entry odd-multiple
-    * table computed per recovery. */
-  private def wnaf5(k: BigInteger): Array[Int] = wnaf(k, 5)
-  /** Fixed-base window: width 8 → odd |d| ≤ 127 → the static 64-entry
-    * G tables; ~14 adds per 128-bit GLV scalar instead of ~26 at w=4. */
-  private def wnaf8(k: BigInteger): Array[Int] = wnaf(k, 8)
 
-  /** Odd multiples 1·G … 127·G normalized to affine, computed once
-    * (the fixed-base wNAF-8 table; class-load cost only). */
-  private lazy val gTable: Array[(BigInteger, BigInteger)] = {
-    val pts = new Array[Pt](64)
-    pts(0) = G
-    val g2 = dbl(G)
-    var i = 1
-    while (i < 64) { pts(i) = add(pts(i - 1), g2); i += 1 }
-    pts.map(toAffine)
-  }
+  // ── limb-based Jacobian arithmetic (table construction) ──────────────
+  // Jacobian (x = X/Z², y = Y/Z³; Z = 0 ⇒ infinity) avoids a modular
+  // inversion per operation. BigInteger remains for scalar (mod n) work,
+  // the square root and the inversions.
 
-  /** Odd Jacobian multiples 1·P, 3·P, …, 15·P. */
-  private def oddMultiples(p: Pt): Array[Pt] = {
-    val tab = new Array[Pt](8)
-    tab(0) = p
-    val p2 = dbl(p)
-    var i = 1
-    while (i < 8) { tab(i) = add(tab(i - 1), p2); i += 1 }
-    tab
-  }
+  private final class JPoint(val x: Array[Long], val y: Array[Long], val z: Array[Long])
+  private def jInf: JPoint = new JPoint(new Array[Long](4), new Array[Long](4), new Array[Long](4))
+  @inline private def jIsInf(p: JPoint): Boolean = Fp256.isZero(p.z)
+  private def jAffine(x: Array[Long], y: Array[Long]): JPoint =
+    new JPoint(Fp256.copy(x), Fp256.copy(y), Array(1L, 0L, 0L, 0L))
 
-  // ── limb-based Jacobian arithmetic (hot ladder path) ─────────────────
-  // Same formulas as the BigInteger versions above, on Fp256 limbs: no
-  // object churn in the inner loop beyond small fixed arrays, no
-  // BigInteger.mod. BigInteger remains for scalar (mod n) work, the one
-  // final inversion, and the startup GLV derivation.
-
-  private final class JPt(val x: Array[Long], val y: Array[Long], val z: Array[Long])
-  private def jInf: JPt = new JPt(new Array[Long](4), new Array[Long](4), new Array[Long](4))
-  @inline private def jIsInf(p: JPt): Boolean = Fp256.isZero(p.z)
-
-  private def jFrom(p: Pt): JPt =
-    if (p.isInfinity) jInf
-    else new JPt(Fp256.fromBigInteger(p.x), Fp256.fromBigInteger(p.y),
-      Fp256.fromBigInteger(p.z))
-
-  private def jToPt(p: JPt): Pt =
-    if (jIsInf(p)) Infinity
-    else Pt(Fp256.toBigInteger(p.x), Fp256.toBigInteger(p.y), Fp256.toBigInteger(p.z))
-
-  private def jDbl(p: JPt): JPt = {
+  /** 2·A, Jacobian doubling for a = 0 (secp256k1). */
+  private def jDbl(p: JPoint): JPoint = {
     if (jIsInf(p) || Fp256.isZero(p.y)) return jInf
     val a = new Array[Long](4); Fp256.sqr(p.x, a) // X²
     val b = new Array[Long](4); Fp256.sqr(p.y, b) // Y²
@@ -209,10 +133,11 @@ object Secp256k1 {
     Fp256.sub(y3, c8, y3)
     val z3 = new Array[Long](4)
     Fp256.mul(p.y, p.z, z3); Fp256.dbl2(z3, z3)
-    new JPt(x3, y3, z3)
+    new JPoint(x3, y3, z3)
   }
 
-  private def jAdd(p: JPt, q: JPt): JPt = {
+  /** A + B, general Jacobian addition. */
+  private def jAdd(p: JPoint, q: JPoint): JPoint = {
     if (jIsInf(p)) return q
     if (jIsInf(q)) return p
     val z1z1 = new Array[Long](4); Fp256.sqr(p.z, z1z1)
@@ -238,188 +163,68 @@ object Secp256k1 {
     Fp256.mul(s1, h3, t); Fp256.sub(y3, t, y3)
     val z3 = new Array[Long](4)
     Fp256.mul(p.z, q.z, t); Fp256.mul(h, t, z3)
-    new JPt(x3, y3, z3)
+    new JPoint(x3, y3, z3)
   }
 
-  /** Mixed addition with an affine (x2, y2) point (Z2 = 1). */
-  private def jAddAffine(p: JPt, x2: Array[Long], y2: Array[Long]): JPt = {
-    if (jIsInf(p)) return new JPt(Fp256.copy(x2), Fp256.copy(y2),
-      Array(1L, 0L, 0L, 0L))
-    val z1z1 = new Array[Long](4); Fp256.sqr(p.z, z1z1)
-    val u2 = new Array[Long](4); Fp256.mul(x2, z1z1, u2)
-    val t = new Array[Long](4)
-    val s2 = new Array[Long](4); Fp256.mul(y2, z1z1, t); Fp256.mul(t, p.z, s2)
-    val h = new Array[Long](4); Fp256.sub(u2, p.x, h)
-    val r = new Array[Long](4); Fp256.sub(s2, p.y, r)
-    if (Fp256.isZero(h)) {
-      if (Fp256.isZero(r)) return jDbl(p)
-      return jInf
-    }
-    val h2 = new Array[Long](4); Fp256.sqr(h, h2)
-    val h3 = new Array[Long](4); Fp256.mul(h2, h, h3)
-    val u1h2 = new Array[Long](4); Fp256.mul(p.x, h2, u1h2)
-    val x3 = new Array[Long](4); Fp256.sqr(r, x3)
-    Fp256.sub(x3, h3, x3); Fp256.sub(x3, u1h2, x3); Fp256.sub(x3, u1h2, x3)
-    val y3 = new Array[Long](4)
-    Fp256.sub(u1h2, x3, y3); Fp256.mul(r, Fp256.copy(y3), y3)
-    Fp256.mul(p.y, h3, t); Fp256.sub(y3, t, y3)
-    val z3 = new Array[Long](4); Fp256.mul(h, p.z, z3)
-    new JPt(x3, y3, z3)
-  }
-
-  private def jNegate(p: JPt): JPt = {
-    if (jIsInf(p)) return p
-    val ny = new Array[Long](4)
-    Fp256.sub(new Array[Long](4), p.y, ny)
-    new JPt(p.x, ny, p.z)
-  }
-
-  // ── GLV endomorphism (secp256k1 has φ(x,y) = (βx, y) = λ·(x,y)) ──────
-  // All constants are DERIVED here and self-verified against the curve; if
-  // any check fails the code falls back to the plain 2-scalar ladder.
-
-  /** Tonelli-Shanks modular square root (m odd prime). */
-  private def sqrtMod(aIn: BigInteger, m: BigInteger): Option[BigInteger] = {
-    val a = aIn.mod(m)
-    if (a.signum == 0) return Some(BigInteger.ZERO)
-    val legendreExp = m.subtract(BigInteger.ONE).shiftRight(1)
-    if (a.modPow(legendreExp, m) != BigInteger.ONE) return None
-    if (m.testBit(1)) // m ≡ 3 (mod 4)
-      return Some(a.modPow(m.add(BigInteger.ONE).shiftRight(2), m))
-    // general case: factor m-1 = q·2^s
-    var q = m.subtract(BigInteger.ONE)
-    var s = 0
-    while (!q.testBit(0)) { q = q.shiftRight(1); s += 1 }
-    // find a non-residue z
-    var z = BigInteger.TWO
-    while (z.modPow(legendreExp, m) == BigInteger.ONE) z = z.add(BigInteger.ONE)
-    var c = z.modPow(q, m)
-    var t = a.modPow(q, m)
-    var r = a.modPow(q.add(BigInteger.ONE).shiftRight(1), m)
-    var mEx = s
-    while (t != BigInteger.ONE) {
-      var t2 = t
-      var i = 0
-      while (t2 != BigInteger.ONE && i < mEx) { t2 = t2.multiply(t2).mod(m); i += 1 }
-      if (i == mEx) return None
-      val b = c.modPow(BigInteger.ONE.shiftLeft(mEx - i - 1), m)
-      r = r.multiply(b).mod(m)
-      c = b.multiply(b).mod(m)
-      t = t.multiply(c).mod(m)
-      mEx = i
-    }
-    Some(r)
-  }
-
-  /** Cube-root-of-unity candidates: roots of x² + x + 1 (mod m). */
-  private def cubeRootsOfUnity(m: BigInteger): Seq[BigInteger] =
-    sqrtMod(m.subtract(BigInteger.valueOf(3)), m).toSeq.flatMap { s3 =>
-      val inv2 = BigInteger.TWO.modInverse(m)
-      Seq(
-        BigInteger.valueOf(-1).add(s3).multiply(inv2).mod(m),
-        BigInteger.valueOf(-1).subtract(s3).multiply(inv2).mod(m))
-    }
-
-  /** Plain double-and-add (used only once, to verify λ/β). */
-  private def mulPlain(k: BigInteger, p: Pt): Pt = {
-    var acc = Infinity
-    var i = k.bitLength - 1
-    while (i >= 0) {
-      acc = dbl(acc)
-      if (k.testBit(i)) acc = add(acc, p)
-      i -= 1
-    }
-    acc
-  }
-
-  /** (λ, β, basis v1, basis v2) — verified; None disables GLV. */
-  private lazy val glvParams: Option[(BigInteger, BigInteger,
-      (BigInteger, BigInteger), (BigInteger, BigInteger))] = {
-    val pairs = for {
-      lam <- cubeRootsOfUnity(N)
-      beta <- cubeRootsOfUnity(P)
-    } yield (lam, beta)
-    val verified = pairs.find { case (lam, beta) =>
-      val (lx, ly) = toAffine(mulPlain(lam, G))
-      lx == Gx.multiply(beta).mod(P) && ly == Gy
-    }
-    verified.flatMap { case (lam, beta) =>
-      // short lattice basis for (k1 + k2·λ ≡ k): extended Euclid on (n, λ),
-      // stop at the first remainder below √n (standard GLV construction)
-      val sqrtN = sqrtFloor(N)
-      var (r0, r1) = (N, lam)
-      var (t0, t1) = (BigInteger.ZERO, BigInteger.ONE)
-      while (r1.compareTo(sqrtN) >= 0) {
-        val q = r0.divide(r1)
-        val r2 = r0.subtract(q.multiply(r1))
-        val t2 = t0.subtract(q.multiply(t1))
-        r0 = r1; t0 = t1; r1 = r2; t1 = t2
-      }
-      val v1 = (r1, t1.negate)
-      val v2 = (r0, t0.negate)
-      // sanity: both basis vectors must satisfy a + b·λ ≡ 0 (mod n)
-      def ok(v: (BigInteger, BigInteger)) =
-        v._1.add(v._2.multiply(lam)).mod(N).signum == 0
-      if (ok(v1) && ok(v2)) Some((lam, beta, v1, v2)) else None
-    }
-  }
-
-  private def sqrtFloor(v: BigInteger): BigInteger = v.sqrt()
-
-  /** Balanced decomposition k = k1 + k2·λ (mod n), |k1|,|k2| ≈ √n. */
-  private def glvDecompose(k: BigInteger, lam: BigInteger,
-      v1: (BigInteger, BigInteger), v2: (BigInteger, BigInteger)): (BigInteger, BigInteger) = {
-    // Babai rounding of (k,0) onto the lattice: round(num / n) to nearest
-    def rnd(num: BigInteger): BigInteger = {
-      val qr = num.add(N.shiftRight(1)).divideAndRemainder(N)
-      if (qr(1).signum < 0) qr(0).subtract(BigInteger.ONE) else qr(0)
-    }
-    val c1 = rnd(v2._2.multiply(k))
-    val c2 = rnd(v1._2.negate.multiply(k))
-    val k1 = k.subtract(c1.multiply(v1._1)).subtract(c2.multiply(v2._1))
-    val k2 = c1.multiply(v1._2).add(c2.multiply(v2._2)).negate
-    (k1, k2)
-  }
-
-  /** φ applied to a Jacobian point: (βX, Y, Z). */
-  private def endo(p: Pt, beta: BigInteger): Pt =
-    if (p.isInfinity) p else Pt(mod(p.x.multiply(beta)), p.y, p.z)
-
-  /** φ applied to the affine G table. */
-  private lazy val gEndoTable: Array[(BigInteger, BigInteger)] =
-    glvParams match {
-      case Some((_, beta, _, _)) =>
-        gTable.map { case (x, y) => (x.multiply(beta).mod(P), y) }
-      case None => Array.empty
-    }
-
-  // limb forms of the static affine tables (+ negated y, precomputed)
-  private lazy val gTabL: Array[(Array[Long], Array[Long], Array[Long])] =
-    gTable.map { case (x, y) =>
-      val yl = Fp256.fromBigInteger(y)
-      val ny = new Array[Long](4); Fp256.sub(new Array[Long](4), yl, ny)
-      (Fp256.fromBigInteger(x), yl, ny)
-    }
-  private lazy val gEndoTabL: Array[(Array[Long], Array[Long], Array[Long])] =
-    gEndoTable.map { case (x, y) =>
-      val yl = Fp256.fromBigInteger(y)
-      val ny = new Array[Long](4); Fp256.sub(new Array[Long](4), yl, ny)
-      (Fp256.fromBigInteger(x), yl, ny)
-    }
-  private lazy val betaL: Option[Array[Long]] =
-    glvParams.map { case (_, beta, _, _) => Fp256.fromBigInteger(beta) }
-
-  private def jOddMultiples(p: JPt): Array[JPt] = {
-    val tab = new Array[JPt](8)
+  /** Odd Jacobian multiples 1·P, 3·P, …, (2n−1)·P. */
+  private def jOddMultiples(p: JPoint, n: Int): Array[JPoint] = {
+    val tab = new Array[JPoint](n)
     tab(0) = p
     val p2 = jDbl(p)
     var i = 1
-    while (i < 8) { tab(i) = jAdd(tab(i - 1), p2); i += 1 }
+    while (i < n) { tab(i) = jAdd(tab(i - 1), p2); i += 1 }
     tab
   }
 
+  /** Affine table entry (x, y, −y): the ladder picks y or −y per digit. */
+  private type Affine = (Array[Long], Array[Long], Array[Long])
+
+  /** Jacobian points → affine limb triples (x, y, −y) with ONE field
+    * inversion (Montgomery batch trick): every ladder addition is then the
+    * cheap mixed form. Callers guarantee no input is infinity (odd
+    * multiples of G or of a valid R < n never are). */
+  private def jBatchAffine(pts: Array[JPoint]): Array[Affine] = {
+    val n = pts.length
+    val prefix = new Array[Array[Long]](n)
+    var acc: Array[Long] = Array(1L, 0L, 0L, 0L)
+    var i = 0
+    while (i < n) {
+      prefix(i) = acc
+      val nxt = new Array[Long](4); Fp256.mul(acc, pts(i).z, nxt); acc = nxt
+      i += 1
+    }
+    var invAcc = Fp256.fromBigInteger(Fp256.toBigInteger(acc).modInverse(P))
+    val out = new Array[Affine](n)
+    i = n - 1
+    while (i >= 0) {
+      val zInv = new Array[Long](4); Fp256.mul(invAcc, prefix(i), zInv)
+      val nxtInv = new Array[Long](4); Fp256.mul(invAcc, pts(i).z, nxtInv); invAcc = nxtInv
+      val zi2 = new Array[Long](4); Fp256.sqr(zInv, zi2)
+      val x = new Array[Long](4); Fp256.mul(pts(i).x, zi2, x)
+      val zi3 = new Array[Long](4); Fp256.mul(zi2, zInv, zi3)
+      val y = new Array[Long](4); Fp256.mul(pts(i).y, zi3, y)
+      val ny = new Array[Long](4); Fp256.sub(new Array[Long](4), y, ny)
+      out(i) = (x, y, ny)
+      i -= 1
+    }
+    out
+  }
+
+  /** φ applied to an affine table: (βx, y, −y). */
+  private def endo(tab: Array[Affine]): Array[Affine] =
+    tab.map { case (x, y, ny) =>
+      val ex = new Array[Long](4); Fp256.mul(x, BetaL, ex)
+      (ex, y, ny)
+    }
+
+  /** Odd multiples 1·G … 127·G normalized to affine, and their φ images:
+    * the static wNAF-8 fixed-base tables, computed once. */
+  private lazy val gTab: Array[Affine] = jBatchAffine(jOddMultiples(
+    jAffine(Fp256.fromBigInteger(Gx), Fp256.fromBigInteger(Gy)), 64))
+  private lazy val gEndoTab: Array[Affine] = endo(gTab)
+
   // ── in-place ladder arithmetic ───────────────────────────────────────
-  // The ~200-step ladder is the hot loop of every recovery; these mutable
+  // The ~130-step ladder is the hot loop of every recovery; these mutable
   // variants keep all temporaries in one per-call scratch pool so a step
   // allocates nothing (the functional jDbl/jAdd above allocate ~10 small
   // arrays per step, which costs as much as the field math itself).
@@ -515,123 +320,38 @@ object Secp256k1 {
       Some(pub)
     }
 
-  /** Jacobian points → affine limb triples (x, y, −y) with ONE field
-    * inversion (Montgomery batch trick): the ladder then uses the cheaper
-    * mixed addition for the R table too, not just the static G tables.
-    * Callers guarantee no input is infinity (odd multiples of a valid
-    * R < n never are). */
-  private def jBatchAffine(pts: Array[JPt]): Array[(Array[Long], Array[Long], Array[Long])] = {
-    val n = pts.length
-    val prefix = new Array[Array[Long]](n)
-    var acc: Array[Long] = Array(1L, 0L, 0L, 0L)
-    var i = 0
-    while (i < n) {
-      prefix(i) = acc
-      val nxt = new Array[Long](4); Fp256.mul(acc, pts(i).z, nxt); acc = nxt
-      i += 1
-    }
-    var invAcc = Fp256.fromBigInteger(Fp256.toBigInteger(acc).modInverse(P))
-    val out = new Array[(Array[Long], Array[Long], Array[Long])](n)
-    i = n - 1
-    while (i >= 0) {
-      val zInv = new Array[Long](4); Fp256.mul(invAcc, prefix(i), zInv)
-      val nxtInv = new Array[Long](4); Fp256.mul(invAcc, pts(i).z, nxtInv); invAcc = nxtInv
-      val zi2 = new Array[Long](4); Fp256.sqr(zInv, zi2)
-      val x = new Array[Long](4); Fp256.mul(pts(i).x, zi2, x)
-      val zi3 = new Array[Long](4); Fp256.mul(zi2, zInv, zi3)
-      val y = new Array[Long](4); Fp256.mul(pts(i).y, zi3, y)
-      val ny = new Array[Long](4); Fp256.sub(new Array[Long](4), y, ny)
-      out(i) = (x, y, ny)
-      i -= 1
-    }
-    out
-  }
-
-  /** k1·R + k2·G. With GLV: 4 interleaved 128-bit wNAF scalars over
-    * {R, φR, G, φG} → half the doublings of the 2-scalar ladder. The R
+  /** k1·R + k2·G for k1, k2 ∈ [0, n): 4 interleaved ~128-bit wNAF scalars
+    * over {R, φR, G, φG} → half the doublings of a 2-scalar ladder. The R
     * tables are batch-normalized to affine (one inversion) and the G
     * scalars use the static wNAF-8 fixed-base tables, so every ladder
-    * addition is the cheap mixed form. Without GLV (derivation failed):
-    * plain interleaved 2-scalar ladder. */
+    * addition is the cheap mixed form. */
   private def shamir(k1: BigInteger, rx: Array[Long], ry: Array[Long], k2: BigInteger): MPt = {
-    glvParams match {
-      case Some((lam, beta, v1, v2)) =>
-        val (r1, r2) = glvDecompose(k1.mod(N), lam, v1, v2)
-        val (g1, g2) = glvDecompose(k2.mod(N), lam, v1, v2)
-        // correctness guard: decomposition must reconstruct the scalars
-        if (r1.add(r2.multiply(lam)).subtract(k1).mod(N).signum != 0 ||
-            g1.add(g2.multiply(lam)).subtract(k2).mod(N).signum != 0)
-          return shamirPlain(k1, rx, ry, k2)
-        val rTab = jBatchAffine(jOddMultiples(
-          new JPt(Fp256.copy(rx), Fp256.copy(ry), Array(1L, 0L, 0L, 0L))))
-        val bl = betaL.get
-        val rTabE = rTab.map { case (x, y, ny) =>
-          val ex = new Array[Long](4); Fp256.mul(x, bl, ex)
-          (ex, y, ny)
-        }
-        def digits(k: BigInteger) = (wnaf5(k.abs), k.signum < 0)
-        def gDigits(k: BigInteger) = (wnaf8(k.abs), k.signum < 0)
-        val (d1, n1) = digits(r1); val (d2, n2) = digits(r2)
-        val (d3, n3) = gDigits(g1); val (d4, n4) = gDigits(g2)
-        val acc = new MPt
-        val s = new Scratch
-        var j = Seq(d1.length, d2.length, d3.length, d4.length).max - 1
-        while (j >= 0) {
-          mDbl(acc, s)
-          if (j < d1.length && d1(j) != 0) {
-            val d = d1(j); val (x, y, ny) = rTab(math.abs(d) >> 1)
-            mAddAffine(acc, x, if ((d > 0) != n1) y else ny, s)
-          }
-          if (j < d2.length && d2(j) != 0) {
-            val d = d2(j); val (x, y, ny) = rTabE(math.abs(d) >> 1)
-            mAddAffine(acc, x, if ((d > 0) != n2) y else ny, s)
-          }
-          if (j < d3.length && d3(j) != 0) {
-            val d = d3(j); val (gx, gy, gny) = gTabL(math.abs(d) >> 1)
-            mAddAffine(acc, gx, if ((d > 0) != n3) gy else gny, s)
-          }
-          if (j < d4.length && d4(j) != 0) {
-            val d = d4(j); val (gx, gy, gny) = gEndoTabL(math.abs(d) >> 1)
-            mAddAffine(acc, gx, if ((d > 0) != n4) gy else gny, s)
-          }
-          j -= 1
-        }
-        acc
-      case None => shamirPlain(k1, rx, ry, k2)
-    }
-  }
-
-  /** The non-GLV 2-scalar interleaved wNAF ladder (limb arithmetic). */
-  private def shamirPlain(k1: BigInteger, rx: Array[Long], ry: Array[Long], k2: BigInteger): MPt = {
-    val rTab = jBatchAffine(jOddMultiples(
-      new JPt(Fp256.copy(rx), Fp256.copy(ry), Array(1L, 0L, 0L, 0L))))
-    val d1 = wnaf5(k1)
-    val d2 = wnaf8(k2)
+    val (r1, r2) = glvDecompose(k1)
+    val (g1, g2) = glvDecompose(k2)
+    val rTab = jBatchAffine(jOddMultiples(jAffine(rx, ry), 8))
+    val rTabE = endo(rTab)
+    val d1 = wnaf(r1.abs, 5); val n1 = r1.signum < 0
+    val d2 = wnaf(r2.abs, 5); val n2 = r2.signum < 0
+    val d3 = wnaf(g1.abs, 8); val n3 = g1.signum < 0
+    val d4 = wnaf(g2.abs, 8); val n4 = g2.signum < 0
     val acc = new MPt
     val s = new Scratch
-    var j = math.max(d1.length, d2.length) - 1
+    // acc += (±d)·T for digit j of one scalar (d odd → entry |d| >> 1)
+    def addDigit(ds: Array[Int], neg: Boolean, tab: Array[Affine], j: Int): Unit =
+      if (j < ds.length && ds(j) != 0) {
+        val d = ds(j); val (x, y, ny) = tab(math.abs(d) >> 1)
+        mAddAffine(acc, x, if ((d > 0) != neg) y else ny, s)
+      }
+    var j = math.max(math.max(d1.length, d2.length), math.max(d3.length, d4.length)) - 1
     while (j >= 0) {
       mDbl(acc, s)
-      if (j < d1.length && d1(j) != 0) {
-        val d = d1(j)
-        val (x, y, ny) = rTab(math.abs(d) >> 1)
-        mAddAffine(acc, x, if (d > 0) y else ny, s)
-      }
-      if (j < d2.length && d2(j) != 0) {
-        val d = d2(j)
-        val (gx, gy, gny) = gTabL(math.abs(d) >> 1)
-        mAddAffine(acc, gx, if (d > 0) gy else gny, s)
-      }
+      addDigit(d1, n1, rTab, j)
+      addDigit(d2, n2, rTabE, j)
+      addDigit(d3, n3, gTab, j)
+      addDigit(d4, n4, gEndoTab, j)
       j -= 1
     }
     acc
-  }
-
-  /** Jacobian → affine (the one inversion). */
-  private def toAffine(p: Pt): (BigInteger, BigInteger) = {
-    val zInv = p.z.modInverse(P)
-    val zInv2 = mod(zInv.multiply(zInv))
-    (mod(p.x.multiply(zInv2)), mod(p.y.multiply(zInv2).multiply(zInv)))
   }
 
   /** Recover the uncompressed public key point from a signature.

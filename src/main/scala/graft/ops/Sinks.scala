@@ -391,7 +391,7 @@ object Sinks {
         done = true
         metrics.foreach(_.add(ChBatchSaveSuccess, 1)) // clickhouse.go:212
       } catch {
-        case e: Exception if attempt < maxRetries =>
+        case _: Exception if attempt < maxRetries =>
           attempt += 1
           metrics.foreach { m => // clickhouse.go:219-232
             m.add(ChErrors, 1)

@@ -541,7 +541,7 @@ object SimilarityOps {
     * (plan-asserted: ScalePlanSpec "map-side WindowGroupLimit"). */
   private def assignVecProbes(rows: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame, probes: Int,
-      margin: Double = Double.PositiveInfinity): org.apache.spark.sql.DataFrame =
+      margin: Double): org.apache.spark.sql.DataFrame =
     if (probes <= 1) assignVec(rows, cents)
     else {
       import graft.functions.VecOps.vec_dot
@@ -740,7 +740,7 @@ object SimilarityOps {
     * HIERARCHICAL: a √k-sized coarse quantizer (always broadcastable)
     * shuffles the corpus ONCE on the cell id, and each cell — now
     * task-sized — re-applies the same train-assign step locally
-    * ([[localKmeans]], the recursive unit; cells past [[CellSplitCap]]
+    * ([[localKmeansProbed]], the recursive unit; cells past [[CellSplitCap]]
     * members are split into bounded contiguous ranges — see the cap's
     * scaladoc for the duplicate-funnel failure it bounds). Blocking
     * quality is
@@ -785,7 +785,7 @@ object SimilarityOps {
     * contiguous chunks — copies are interchangeable, so any chunk
     * self-contains partners. Deterministic (value hash, no seed, no
     * shuffle-order dependence); each split preserves the caller's
-    * id-sorted order, the localKmeans contract. Parameterized `cap` for
+    * id-sorted order, the localKmeansProbed contract. Parameterized `cap` for
     * the spec; production uses [[CellSplitCap]]. */
   private[graft] def cellSplits(vs: Array[(Long, Array[Double])],
       cap: Int = CellSplitCap): Iterator[Array[(Long, Array[Double])]] =
@@ -803,27 +803,6 @@ object SimilarityOps {
       }
     }
 
-  /** Task-local deterministic Lloyd over one cell — the recursive unit of
-    * the hierarchical blocking. Seeds = every (len/k)-th member of the
-    * id-sorted cell (STRIDED, not the k lowest ids: near-dup pairs tend
-    * to sit on ADJACENT ids, and lowest-k seeding made both members of
-    * such a pair their own seed — two near-identical centroids that
-    * Lloyd never merges, splitting exactly the pairs the blocking exists
-    * to find; measured at 10 M vectors the low-id subsample's recall
-    * collapsed to 0.46 vs 0.80 corpus-wide before the stride). Ties in
-    * the argmin break toward the lower centroid id; `vs` MUST be sorted
-    * by vec_id (the caller sorts) so the result is independent of
-    * shuffle arrival order. Returns the per-vector sub-cluster ids. */
-  private def localKmeans(vs: Array[(Long, Array[Double])], k: Int, lloyd: Int = 2): Array[Int] =
-    localKmeansProbed(vs, k, 0.0, lloyd).map(_._1)
-
-  /** [[localKmeans]] plus the BOUNDARY runner-up: per vector, (best sub-
-    * cluster, second sub-cluster or -1). The second is kept only when its
-    * d² is within `subMargin`× of the best — the level-2 twin of
-    * [[assignVecProbes]]' margin knob, aimed at the pairs the r12 10 M
-    * miss-split printout showed splitting across SUB-clusters within a
-    * shared cell (VERDICT r12 item 4). subMargin ≤ 1 keeps the single-
-    * assignment contract exactly (second is always -1). */
   /** The Lloyd-fit half of [[localKmeansProbed]]: strided seeds, `lloyd`
     * iterations, dead centroids dropped — returns the SETTLED centroids.
     * Exposed separately so the standing semantic index
@@ -876,6 +855,23 @@ object SimilarityOps {
     cents
   }
 
+  /** Task-local deterministic Lloyd over one cell — the recursive unit of
+    * the hierarchical blocking. Seeds = every (len/k)-th member of the
+    * id-sorted cell (STRIDED, not the k lowest ids: near-dup pairs tend
+    * to sit on ADJACENT ids, and lowest-k seeding made both members of
+    * such a pair their own seed — two near-identical centroids that
+    * Lloyd never merges, splitting exactly the pairs the blocking exists
+    * to find; measured at 10 M vectors the low-id subsample's recall
+    * collapsed to 0.46 vs 0.80 corpus-wide before the stride). Ties in
+    * the argmin break toward the lower centroid id; `vs` MUST be sorted
+    * by vec_id (the caller sorts) so the result is independent of
+    * shuffle arrival order. Returns, per vector, (best sub-cluster,
+    * BOUNDARY runner-up or -1). The runner-up is kept only when its
+    * d² is within `subMargin`× of the best — the level-2 twin of
+    * [[assignVecProbes]]' margin knob, aimed at the pairs the r12 10 M
+    * miss-split printout showed splitting across SUB-clusters within a
+    * shared cell (VERDICT r12 item 4). subMargin ≤ 1 keeps the single-
+    * assignment contract exactly (second is always -1). */
   private[graft] def localKmeansProbed(vs: Array[(Long, Array[Double])], k: Int,
       subMargin: Double, lloyd: Int = 2): Array[(Int, Int)] = {
     val dim = vs.head._2.length

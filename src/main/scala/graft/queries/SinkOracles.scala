@@ -65,53 +65,7 @@ object SinkOracles {
     val props = jdbcProps
     jdbcLayout.named(s, dir) { name =>
       val url = s"jdbc:derby:memory:$name;create=true"
-      // ONE exchange feeds all three micro-batches (guide §2.4 — two
-      // operations keyed the same way share one exchange; VERDICT r21
-      // item 2): the payload is computed once, hash-repartitioned once,
-      // and pinned with an eager localCheckpoint that PRESERVES the
-      // partitioning (LogicalRDD carries outputPartitioning). Each batch
-      // slice then satisfies the sink's dropDuplicates("hash") clustering
-      // requirement from memory — the per-batch dedup still does its real
-      // work (the slices carry genuine duplicates; the S14 contract's
-      // proof surface is unchanged) but plans NO further Exchange, where
-      // the old shape re-scanned events.parquet and re-shuffled the
-      // sample once per batch (3 scans + 3 exchanges + the retry's
-      // recompute). Values are unchanged: every payload column is a pure
-      // function of the dedup key, so the arbitrary-row-wins winner is
-      // the same row either way.
-      val sample = Tables.events(s, dir)
-        .filter(col("event_id") % 7 === 0)
-        .select(
-          syntheticHash(col("user_id")).as("hash"),
-          (lit(1700000000000L) + col("user_id") * 1000L).as("timestamp_ms"),
-          (col("user_id") * 1000003L % 97L).as("fee_bucket"),
-          concat(lit("src"), (col("user_id") % 5).cast("string")).as("source"),
-          (col("event_id") % 3).as("b"))
-      // AQE is scoped OFF for the pin itself: under AQE the checkpoint's
-      // LogicalRDD captures UnknownPartitioning (the adaptive plan's
-      // partitioning is not final at capture time) and every slice would
-      // re-plan its dedup exchange. The plain plan captures
-      // hashpartitioning(hash, 4) — 4 partitions is the fixture's fixed
-      // I/O shape (a ~14k-row sample into one embedded Derby endpoint;
-      // the endpoint, not the cluster, is the bottleneck at any SF).
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prevAqe = s.conf.get(aqeKey)
-      s.conf.set(aqeKey, "false")
-      val (pinned, release) =
-        try DedupOps.checkpointReleasable(sample.repartition(4, col("hash")))
-        finally s.conf.set(aqeKey, prevAqe)
-      // plan evidence hook (plans/r22): SPARK_GRAFT_DUMP_JDBC_PLAN=1
-      // prints the exact frame each sink call dedups — after the pin it
-      // must plan NO Exchange (the LogicalRDD carries hashpartitioning) —
-      // plus the r21 unpinned shape for the before/after diff.
-      if (sys.env.contains("SPARK_GRAFT_DUMP_JDBC_PLAN")) {
-        println("==== r21 shape (per-batch scan + dedup exchange) ====")
-        sample.filter(col("b") === 0).drop("b").dropDuplicates("hash")
-          .explain("formatted")
-        println("==== r22 shape (batch slice over the pinned exchange) ====")
-        pinned.filter(col("b") === 0).drop("b").dropDuplicates("hash")
-          .explain("formatted")
-      }
+      val (pinned, release) = pinnedJdbcSample(s, dir)
       try {
         val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
         val sink = graft.ops.Sinks.jdbcBatchSink(
@@ -129,6 +83,45 @@ object SinkOracles {
         }
       } finally release()
     }
+  }
+
+  /** The S14 sample, hash-repartitioned once and pinned: ONE exchange
+    * feeds all three micro-batches (guide §2.4 — two operations keyed the
+    * same way share one exchange; VERDICT r21 item 2). The payload is
+    * computed once, hash-repartitioned once, and pinned with an eager
+    * localCheckpoint that PRESERVES the partitioning (LogicalRDD carries
+    * outputPartitioning). Each batch slice then satisfies the sink's
+    * dropDuplicates("hash") clustering requirement from memory — the
+    * per-batch dedup still does its real work (the slices carry genuine
+    * duplicates; the S14 contract's proof surface is unchanged) but plans
+    * NO further Exchange (ScalePlanSpec pins this), where a per-batch
+    * shape re-scans events.parquet and re-shuffles the sample once per
+    * batch (3 scans + 3 exchanges + the retry's recompute). Values are
+    * unchanged: every payload column is a pure function of the dedup
+    * key, so the arbitrary-row-wins winner is the same row either way.
+    * @return the pinned frame (column `b` = batch) and its release */
+  private[graft] def pinnedJdbcSample(s: SparkSession, dir: String)
+      : (DataFrame, () => Unit) = {
+    val sample = Tables.events(s, dir)
+      .filter(col("event_id") % 7 === 0)
+      .select(
+        syntheticHash(col("user_id")).as("hash"),
+        (lit(1700000000000L) + col("user_id") * 1000L).as("timestamp_ms"),
+        (col("user_id") * 1000003L % 97L).as("fee_bucket"),
+        concat(lit("src"), (col("user_id") % 5).cast("string")).as("source"),
+        (col("event_id") % 3).as("b"))
+    // AQE is scoped OFF for the pin itself: under AQE the checkpoint's
+    // LogicalRDD captures UnknownPartitioning (the adaptive plan's
+    // partitioning is not final at capture time) and every slice would
+    // re-plan its dedup exchange. The plain plan captures
+    // hashpartitioning(hash, 4) — 4 partitions is the fixture's fixed
+    // I/O shape (a ~14k-row sample into one embedded Derby endpoint;
+    // the endpoint, not the cluster, is the bottleneck at any SF).
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val prevAqe = s.conf.get(aqeKey)
+    s.conf.set(aqeKey, "false")
+    try DedupOps.checkpointReleasable(sample.repartition(4, col("hash")))
+    finally s.conf.set(aqeKey, prevAqe)
   }
 
   private[graft] def jdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {

@@ -110,20 +110,35 @@ class PropertySpec extends AnyFunSuite {
 
   test("secp recovery: arbitrary (hash, r, s, recId) returns None or a 20-byte address, deterministically") {
     import graft.functions.Secp256k1
+    import java.math.BigInteger
+    val n = new BigInteger(
+      "fffffffffffffffffffffffffffffffebaaedce6af48a03bbfd25e8cd0364141", 16)
+    // mostly in [1, n) so most samples reach the ladder; a few edge and
+    // out-of-range values exercise the input checks
+    val genScalar: Gen[BigInteger] = Gen.frequency(
+      9 -> Gen.listOfN(32, Arbitrary.arbByte.arbitrary)
+        .map(b => new BigInteger(1, b.toArray).mod(n.subtract(BigInteger.ONE)).add(BigInteger.ONE)),
+      1 -> Gen.oneOf(BigInteger.ZERO, BigInteger.ONE, n.shiftRight(1),
+        n.shiftRight(1).add(BigInteger.ONE), n.subtract(BigInteger.ONE), n,
+        BigInteger.ONE.shiftLeft(256).subtract(BigInteger.ONE)))
     val genCase = for {
       msg <- Gen.listOfN(32, Arbitrary.arbByte.arbitrary).map(_.toArray)
-      r <- Gen.listOfN(33, Arbitrary.arbByte.arbitrary)
-        .map(b => new java.math.BigInteger(1, b.toArray))
-      s <- Gen.listOfN(33, Arbitrary.arbByte.arbitrary)
-        .map(b => new java.math.BigInteger(1, b.toArray))
-      recId <- Gen.chooseNum(-1, 4)
+      r <- genScalar
+      s <- genScalar
+      recId <- Gen.frequency(4 -> Gen.chooseNum(0, 1), 1 -> Gen.oneOf(-1, 2, 3, 4))
     } yield (msg, r, s, recId)
+    var recovered = 0
     samples(genCase, 200).foreach { case (msg, r, s, recId) =>
       val a1 = Secp256k1.recoverAddress(msg, r, s, recId)
       a1.foreach(addr => assert(addr.length == 20))
       val a2 = Secp256k1.recoverAddress(msg, r, s, recId)
       assert(a1.map(_.toSeq) == a2.map(_.toSeq), "recovery must be deterministic")
+      val inRange = r.signum > 0 && r.compareTo(n) < 0 && s.signum > 0 &&
+        s.compareTo(n.shiftRight(1)) <= 0 && recId >= 0 && recId <= 3
+      if (!inRange) assert(a1.isEmpty, s"out-of-range input recovered: r=$r s=$s recId=$recId")
+      if (a1.isDefined) recovered += 1
     }
+    assert(recovered > 0, "no sample reached the recovery ladder")
   }
 
   test("rlp: malformed inputs throw RlpException, never loop or OOM") {

@@ -185,6 +185,27 @@ class ScalePlanSpec extends AnyFunSuite {
     assert(out.nonEmpty)
   }
 
+  test("JDBC sink fixture: a batch slice of the pinned sample dedups with no Exchange") {
+    // The pin's LogicalRDD must keep hashpartitioning(hash, 4) so each
+    // micro-batch's dropDuplicates("hash") is satisfied from memory; if a
+    // Spark upgrade drops the captured partitioning, every batch would
+    // plan its own dedup shuffle again.
+    val (pinned, release) = queries.SinkOracles.pinnedJdbcSample(spark, sf)
+    try {
+      val captured = pinned.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.outputPartitioning.toString
+      }
+      assert(captured.exists(_.startsWith("hashpartitioning(hash")),
+        s"pinned sample lost its hash partitioning: $captured")
+      (0 until 3).foreach { b =>
+        val slice = pinned.filter(col("b") === b).drop("b").dropDuplicates("hash")
+        val plan = finalPlan(slice)
+        assert(!plan.contains("Exchange"), s"batch $b slice re-plans a shuffle:\n$plan")
+        assert(slice.count() > 0, s"batch $b slice is empty")
+      }
+    } finally release()
+  }
+
   test("bucketed tables join with zero shuffle exchanges") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
